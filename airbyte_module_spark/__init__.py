@@ -4,17 +4,19 @@ Re-expresses the query/data-processing capabilities of fybrik/airbyte-module
 (reference: /root/reference, Apache-2.0) as an idiomatic Spark pipeline:
 
 - Airbyte-style change-event envelopes (``{"type":"RECORD","record":{...}}``,
-  reference ``abm/connector.py:125-128``) parsed with ``from_json`` — never
-  per-row Python.
-- Last-writer-wins dedup over the ``emitted_at`` cursor (window/row_number).
+  reference ``abm/connector.py:125-128``) parsed with ONE ``from_json`` per
+  line — never per-row Python.
+- Last-writer-wins dedup over the ``(emitted_at, seq)`` cursor: one
+  ``max_by`` aggregate per identity key, map-side combined before the
+  shuffle.
 - MERGE into a snapshot-versioned lake table of source-code repositories
   (Iceberg-style copy-on-write / merge-on-read semantics implemented over
   parquet with public DataFrame APIs — no proprietary formats).
 - Structured Streaming tail with checkpointed, idempotent ``foreachBatch``
   upserts (exactly-once effective semantics).
-- Vectorized pandas/Arrow UDFs for content normalization and sha256
-  fingerprinting (replacing the reference's ``iterrows`` write loop at
-  ``abm/server.py:206-210``).
+- Content normalization and sha256 fingerprinting as built-in Catalyst
+  expressions inside whole-stage codegen (replacing the reference's
+  ``iterrows`` write loop at ``abm/server.py:206-210``).
 
 Nothing here is a port: the reference delegates all data movement to
 dockerized Airbyte connectors; this engine replaces every subprocess boundary

@@ -22,6 +22,7 @@ docker round-trip.
 from __future__ import annotations
 
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,10 +155,11 @@ class Engine:
         )
         if "content" in df.columns:
             changes = self.pipeline.transform(changes)
+        # one exactly-once key per write call: two writes stamped in the
+        # same millisecond must both apply
         version = self.table.merge(
             changes,
-            batch_id=now_ms,
-            checkpoint_id=f"write-{mode}",
+            checkpoint_id=f"write-{mode}-{uuid.uuid4().hex}",
             truncate=(mode == "overwrite"),
         )
         if version is not None and self.pipeline.post_merge_hook is not None:

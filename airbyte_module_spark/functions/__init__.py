@@ -1,13 +1,6 @@
-from airbyte_module_spark.functions.content import (
-    normalize_content,
-    normalize_content_expr,
-    sha256_content,
-    sha256_expr,
-)
+from airbyte_module_spark.functions.content import normalize_content_expr, sha256_expr
 
 __all__ = [
-    "normalize_content",
     "normalize_content_expr",
-    "sha256_content",
     "sha256_expr",
 ]

@@ -1,41 +1,35 @@
-"""Vectorized content normalization + sha256 fingerprinting.
+"""Content normalization + sha256 fingerprinting as Catalyst expressions.
 
 The reference's only per-row compute is the write-path ``iterrows`` loop
 (``/root/reference/abm/server.py:206-210``) — the structural bottleneck
-BASELINE.md calls out. Here every per-row transform is either a built-in
-Catalyst expression (codegen'd, JVM-side) or an Arrow-batched pandas UDF
-(Series→Series, "no per-row Python" per BASELINE.json input_hint).
-
-Both forms are provided for the two spec'd functions; tests assert the pandas
-UDF and the expression form agree, and that plans show ``ArrowEvalPython``
-(never ``BatchEvalPython``).
+BASELINE.md calls out. Here both transforms are built-in Catalyst
+expressions: codegen'd, JVM-side, no Python boundary at all.
+:func:`normalize_py` is the plain-Python reference the oracle and the tests
+compare against.
 """
 
 from __future__ import annotations
 
-import hashlib
+import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-
-# --- Expression (preferred: whole-stage codegen, no Python at all) ---------
 
 def normalize_content_expr(col: Column | str) -> Column:
     r"""``\r\n``/``\r`` → ``\n``; strip trailing whitespace per line.
 
-    Pure Catalyst: two regexp_replace nodes, fused into the scan's codegen
-    stage. This is the hot-path form used by the ingest pipeline.
+    Pure Catalyst: three regexp_replace nodes, fused into the scan's codegen
+    stage. This is the form used by the ingest pipeline and every query.
     """
     c = F.col(col) if isinstance(col, str) else col
     unified = F.regexp_replace(c, "\r\n?", "\n")
-    # two-step (no lookahead) so the exact same regexes run under RE2-based
-    # oracles: strip ws before any newline, then ws at end of text
+    # two-step (no lookahead) so the same regexes run under RE2-based
+    # oracles: strip ws before any newline, then ws at end of text. The end
+    # anchor is \z, not $: Java's $ also matches before a final line
+    # terminator (U+2028, U+2029, U+0085), RE2's $ (and Python's \Z) do not
     stripped = F.regexp_replace(unified, "[ \t]+\n", "\n")
-    return F.regexp_replace(stripped, "[ \t]+$", "")
+    return F.regexp_replace(stripped, "[ \t]+\\z", "")
 
 
 def sha256_expr(col: Column | str) -> Column:
@@ -44,29 +38,9 @@ def sha256_expr(col: Column | str) -> Column:
     return F.sha2(c, 256)
 
 
-# --- Pandas UDFs (spec'd by north_star; Arrow-batched, vectorized) ----------
-
-@pandas_udf(T.StringType())
-def normalize_content(s: pd.Series) -> pd.Series:
-    """Vectorized normalization: pandas str ops over the whole Arrow batch."""
-    out = s.str.replace("\r\n", "\n", regex=False).str.replace("\r", "\n", regex=False)
-    out = out.str.replace(r"[ \t]+\n", "\n", regex=True)
-    return out.str.replace(r"[ \t]+\Z", "", regex=True)
-
-
-@pandas_udf(T.StringType())
-def sha256_content(s: pd.Series) -> pd.Series:
-    """Vectorized sha256 hex digest (hashlib over the Arrow batch)."""
-    return s.map(
-        lambda x: hashlib.sha256(x.encode("utf-8")).hexdigest() if x is not None else None
-    )
-
-
 def normalize_py(text: str | None) -> str | None:
     """Plain-Python reference implementation (oracle/tests only)."""
     if text is None:
         return None
-    import re
-
     t = text.replace("\r\n", "\n").replace("\r", "\n")
     return re.sub(r"[ \t]+\Z", "", re.sub(r"[ \t]+\n", "\n", t))

@@ -12,11 +12,12 @@ the RECORD example documented at ``/root/reference/abm/connector.py:125-128``:
                          "commit": "<40-hex>", "lang": "python",
                          "content": "..."}}}
 
-``data`` is kept as a raw JSON string in the envelope schema so that additive
-schema evolution (new fields appearing mid-stream, FIXTURES.md F5) can be
-handled per micro-batch without restarting the stream: the engine inspects
-``json_object_keys`` per batch and widens the parse schema + table schema
-additively (SURVEY.md §2.8 T4).
+The streaming source reads raw lines, so additive schema evolution (new
+fields appearing mid-stream, FIXTURES.md F5) is handled per micro-batch
+without restarting the stream: each batch parses ``data`` as a struct of the
+current table schema (:func:`envelope_schema`), the engine inspects
+``json_object_keys`` of the raw payload, and widens the parse schema + table
+schema additively (SURVEY.md §2.8 T4).
 
 Engine metadata columns use the ``_ab_`` prefix, mirroring the reference's
 ``_airbyte_`` metadata columns that are stripped from user-facing schemas
@@ -42,25 +43,6 @@ META_PREFIX = "_ab_"
 
 #: Ingest-time partition/bucket column (hidden-partitioning analogue).
 BUCKET_COLUMN = "_ab_bucket"
-
-#: Envelope schema. `data` stays a JSON string until the per-batch parse so
-#: the streaming source schema never has to change when data fields evolve.
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField("type", T.StringType()),
-        T.StructField(
-            "record",
-            T.StructType(
-                [
-                    T.StructField("stream", T.StringType()),
-                    T.StructField("namespace", T.StringType()),
-                    T.StructField("emitted_at", T.LongType()),
-                    T.StructField("data", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 #: Observed payload field names per row (internal; evolution probe only).
 META_KEYS = "_ab_keys"
@@ -117,7 +99,7 @@ def user_columns(data_schema: T.StructType) -> list[str]:
 
 #: Schema of the target table rows = user columns + metadata columns.
 def table_schema(data_schema: T.StructType) -> T.StructType:
-    fields = [f for f in data_schema.fields if f.name not in ("op", "seq")]
+    fields = [data_schema[c] for c in user_columns(data_schema)]
     fields += [
         T.StructField(META_EMITTED, T.LongType(), True),
         T.StructField(META_SEQ, T.LongType(), True),

@@ -35,9 +35,8 @@ class BatchLineage:
 
 
 def lineage_from_grouped(
-    grouped: DataFrame, batch_id: int, checkpoint_id: str,
-    with_observed_keys: bool = False,
-) -> BatchLineage | tuple[BatchLineage, list[str]]:
+    grouped: DataFrame, batch_id: int, checkpoint_id: str
+) -> tuple[BatchLineage, list[str]]:
     """Lineage from the ingest's per-key LWW aggregate (one row per live
     key: ``_w`` winner struct, ``_n`` event count, ``_mne/_mxe`` cursor
     range, ``_mns/_mxs`` offset range — see CdcPipeline.apply_batch).
@@ -47,15 +46,15 @@ def lineage_from_grouped(
     the full feed — the per-partition "source offset range, rows applied"
     the north rule asks for falls out of numbers the dedup already computed.
 
-    ``with_observed_keys=True`` additionally returns the distinct payload
-    field names observed on winner lines — the schema-evolution probe —
-    riding the SAME aggregation job (per-bucket ``collect_set`` of each
-    winner's key array, flattened and deduped driver-side over the <=
-    n_buckets rows). Probe and lineage each cost one driver job per
-    micro-batch when run separately; at production tail cadence (small
-    batches, many triggers) the fixed per-job cost dominates both, so the
-    merged form halves the engine-owned driver jobs between trigger and
-    merge (round-6 multibatch attribution)."""
+    Also returns the distinct payload field names observed on winner
+    lines — the schema-evolution probe — riding the SAME aggregation job
+    (per-bucket ``collect_set`` of each winner's key array, flattened and
+    deduped driver-side over the <= n_buckets rows). Probe and lineage
+    each cost one driver job per micro-batch when run separately; at
+    production tail cadence (small batches, many triggers) the fixed
+    per-job cost dominates both, so the merged form halves the
+    engine-owned driver jobs between trigger and merge (round-6
+    multibatch attribution)."""
     aggs = [
         F.sum("_n").alias("events"),
         F.count("*").alias("winners"),
@@ -64,27 +63,18 @@ def lineage_from_grouped(
         F.max("_mxe").alias("max_emitted_at"),
         F.min("_mns").alias("min_seq"),
         F.max("_mxs").alias("max_seq"),
-    ]
-    if with_observed_keys:
-        aggs.append(
-            F.array_distinct(
-                F.flatten(
-                    F.collect_set(
-                        F.json_object_keys(
-                            F.get_json_object(
-                                F.col("_w.value"), "$.record.data"
-                            )
-                        )
+        F.array_distinct(
+            F.flatten(
+                F.collect_set(
+                    F.json_object_keys(
+                        F.get_json_object(F.col("_w.value"), "$.record.data")
                     )
                 )
-            ).alias("observed_keys")
-        )
+            )
+        ).alias("observed_keys"),
+    ]
     rows = grouped.groupBy(model.BUCKET_COLUMN).agg(*aggs).collect()
-    observed: list[str] = (
-        sorted({k for r in rows for k in (r["observed_keys"] or [])})
-        if with_observed_keys
-        else []
-    )
+    observed = sorted({k for r in rows for k in (r["observed_keys"] or [])})
     per_partition = [
         {
             model.BUCKET_COLUMN: r[model.BUCKET_COLUMN],
@@ -110,7 +100,7 @@ def lineage_from_grouped(
         buckets=sorted(int(r[model.BUCKET_COLUMN]) for r in rows),
         per_partition=per_partition,
     )
-    return (lin, observed) if with_observed_keys else lin
+    return lin, observed
 
 
 def lineage_from_batch(

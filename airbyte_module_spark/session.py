@@ -8,9 +8,12 @@ protocol" for the two-parallelism-level evidence run.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -117,13 +120,14 @@ def _warm_python_workers(spark: SparkSession) -> None:
     reusable worker pool and warms the imports; nothing from any data
     directory is touched, so there is nothing to cache or replay.
     Disable with SPARK_GRAFT_NO_PY_WARMUP=1 (e.g. Python-free smoke jobs).
+    A failed warmup logs a warning and leaves the session unmarked, so the
+    next ``get_spark`` call tries again.
     """
     if os.environ.get("SPARK_GRAFT_NO_PY_WARMUP"):
         return
     sc = spark.sparkContext
     if sc is None or getattr(sc, "_ams_py_warm", False):
         return
-    sc._ams_py_warm = True
 
     def _w(batches):
         import hashlib  # noqa: F401
@@ -133,4 +137,11 @@ def _warm_python_workers(spark: SparkSession) -> None:
             yield b
 
     n = max(sc.defaultParallelism, 1)
-    spark.range(n, numPartitions=n).mapInPandas(_w, "id long").collect()
+    try:
+        spark.range(n, numPartitions=n).mapInPandas(_w, "id long").collect()
+    except Exception:  # warmup is an optimization: never fail the session
+        _log.warning(
+            "python worker warmup failed; the session stays usable", exc_info=True
+        )
+        return
+    sc._ams_py_warm = True

@@ -2,17 +2,21 @@
 
 Replaces the reference's connector read path — dockerized ``read`` subprocess,
 stdout line filtering and 100-line batching (``/root/reference/abm/
-connector.py:138-161,212-243``) — with Spark's JSON source. Message-type
-filtering (drop LOG/STATE, keep RECORD — reference ``abm/connector.py:
-143-157``), stream filtering (``abm/connector.py:216-221``) and record
-projection (``abm/connector.py:130-131``) become Catalyst-optimized
-filter/select; non-JSON noise lines land as nulls and are filtered, mirroring
-the reference's try/continue skip.
+connector.py:138-161,212-243``) — with Spark's text source and ONE envelope
+parser, :func:`parse_envelopes_once`. Message-type filtering (drop LOG/STATE,
+keep RECORD — reference ``abm/connector.py:143-157``), stream filtering
+(``abm/connector.py:216-221``) and record projection
+(``abm/connector.py:130-131``) become one Catalyst projection + filter over a
+single ``from_json`` per line; non-JSON noise lines parse to nulls and are
+filtered, mirroring the reference's try/continue skip. The keyed ingest path
+calls it with a data schema that types only the identity keys + op + seq
+(plus the raw line); the keyless path and the ``envelope_parse`` query call
+it with the full table schema.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,90 +43,36 @@ def read_feed_stream(
     return reader.load(feed_path)
 
 
-def _cursor_cols() -> list[Column]:
-    return [F.col(model.META_EMITTED), F.col(model.META_SEQ)]
-
-
-def parse_envelopes(
-    raw: DataFrame,
-    data_schema: T.StructType | None = None,
-    stream: str = model.STREAM_NAME,
-) -> DataFrame:
-    """Envelope lines → typed change rows.
-
-    Output columns: user data columns + ``_ab_emitted_at, _ab_seq, _ab_op``.
-    Entirely JVM-side (``from_json`` + projections); ``.explain`` shows a
-    single WholeStageCodegen span with the RECORD/stream filters pushed onto
-    the scan.
-    """
-    data_schema = data_schema or model.base_data_schema()
-    env = raw.select(
-        F.from_json(F.col("value"), model.ENVELOPE_SCHEMA).alias("m")
-    ).select("m.type", "m.record.*")
-    records = env.filter(
-        (F.col("type") == "RECORD") & (F.col("stream") == stream)
-    )
-    parsed = records.select(
-        F.col("emitted_at").alias(model.META_EMITTED),
-        F.from_json(F.col("data"), data_schema).alias("d"),
-    )
-    user_cols = [f.name for f in data_schema.fields if f.name not in ("op", "seq")]
-    return parsed.select(
-        *[F.col(f"d.{c}").alias(c) for c in user_cols],
-        F.col(model.META_EMITTED),
-        F.col("d.seq").alias(model.META_SEQ),
-        F.col("d.op").alias(model.META_OP),
-    ).filter(F.col(model.META_OP).isNotNull())
-
-
 def parse_envelopes_once(
     raw: DataFrame,
     data_schema: T.StructType | None = None,
     stream: str = model.STREAM_NAME,
     with_keys: bool = False,
+    keep_value: bool = False,
 ) -> DataFrame:
-    """One-pass envelope parse (the ingest hot path).
+    """One-pass envelope parse: raw lines → typed change rows.
 
-    A single ``from_json`` per line decodes the full envelope with the data
-    payload typed as a struct of the *current* table schema (the fast parse
-    shape — see ``model.envelope_schema`` for the measured map-vs-struct
-    pitfall). When ``with_keys`` is set, the observed payload field names for
-    the schema-evolution probe ride the same scan via ``json_object_keys`` on
-    the raw line — evolution detection costs no extra pass over the feed.
-    """
-    data_schema = data_schema or model.base_data_schema()
-    env_schema = model.envelope_schema(data_schema)
-    m = F.from_json(F.col("value"), env_schema)
-    out_cols = [
-        m["record"]["data"][f.name].alias(f.name)
-        for f in data_schema.fields
-        if f.name not in ("op", "seq")
-    ] + [
-        m["record"]["emitted_at"].alias(model.META_EMITTED),
-        m["record"]["data"]["seq"].cast("long").alias(model.META_SEQ),
-        m["record"]["data"]["op"].alias(model.META_OP),
-    ]
-    if with_keys:
-        out_cols.append(
-            F.json_object_keys(
-                F.get_json_object(F.col("value"), "$.record.data")
-            ).alias(model.META_KEYS)
-        )
-    return _project_filter_once(raw, m, out_cols, stream)
+    Output: the user columns of ``data_schema`` + ``_ab_emitted_at, _ab_seq,
+    _ab_op``; ``with_keys`` adds the observed payload field names
+    (``_ab_keys``, the keyless path's schema-evolution probe, read with
+    ``json_object_keys`` on the raw line in the same scan); ``keep_value``
+    adds the raw ``value`` line untouched (the keyed path's LWW winner
+    payload, fully decoded later on winners only).
 
+    ONE ``from_json`` per line decodes the envelope with the data payload
+    typed as a struct of ``data_schema`` — the fast parse shape (see
+    ``model.envelope_schema`` for the measured map-vs-struct pitfall).
+    Jackson tokenizes the whole line but materializes only the typed
+    fields, so a schema of just keys + op + seq is the cheap identity/
+    cursor parse of the keyed hot path.
 
-def _project_filter_once(
-    raw: DataFrame, m, out_cols: list[Column], stream: str, keep_value: bool = False
-) -> DataFrame:
-    """Single-parse projection+filter shape for envelope decoding.
-
-    The naive ``select(from_json(...).alias("m")) .filter(m.type == ...)``
+    The naive ``select(from_json(...).alias("m")).filter(m.type == ...)``
     costs 2-3 JSON parses per line: Catalyst pushes the type/stream/op
     predicates below the projection (substituting the from_json expression
     into each) and rewrites every ``GetStructField(from_json(...))`` into
     its own schema-pruned ``from_json`` — measured 7.5s vs 3.0s for a
-    single parse on the 10M-event feed at local[32]. This shape restores
-    one-parse-per-line with public APIs:
+    single parse on the 10M-event feed at local[32]. This shape keeps
+    one parse per line with public APIs:
 
     - ALL field extractions + the RECORD/stream/op keep-predicate are
       aliases of ONE projection, so per-operator subexpression elimination
@@ -140,73 +90,28 @@ def _project_filter_once(
       the per-field schema-pruned from_json rewrite that would defeat CSE
       by making the copies textually different.
     """
+    data_schema = data_schema or model.base_data_schema()
+    m = F.from_json(F.col("value"), model.envelope_schema(data_schema))
+    data = m["record"]["data"]
+    cols = [data[c].alias(c) for c in model.user_columns(data_schema)] + [
+        m["record"]["emitted_at"].alias(model.META_EMITTED),
+        data["seq"].cast("long").alias(model.META_SEQ),
+        data["op"].alias(model.META_OP),
+    ]
+    if with_keys:
+        cols.append(
+            F.json_object_keys(
+                F.get_json_object(F.col("value"), "$.record.data")
+            ).alias(model.META_KEYS)
+        )
+    if keep_value:
+        cols.append(F.col("value"))
     keep = (
         (m["type"] == "RECORD")
         & (m["record"]["stream"] == stream)
-        & m["record"]["data"]["op"].isNotNull()
+        & data["op"].isNotNull()
     )
-    cols = list(out_cols)
-    if keep_value:
-        cols.append(F.col("value"))
     proj = raw.select(*cols, keep.alias("_keep"), F.rand().alias("_nd"))
     return proj.filter(F.col("_keep") & (F.col("_nd") > -1.0)).drop(
         "_keep", "_nd"
     )
-
-
-def parse_envelopes_minimal(
-    raw: DataFrame,
-    key_columns: list[str],
-    stream: str = model.STREAM_NAME,
-    key_types: dict[str, T.DataType] | None = None,
-) -> DataFrame:
-    """Identity/cursor-only envelope parse — the keyed-ingest hot path.
-
-    Output: key columns + ``_ab_emitted_at, _ab_seq, _ab_op`` + the raw
-    ``value`` line. ONE ``from_json`` per line against a schema that types
-    only the identity keys, op and seq — Jackson still tokenizes the whole
-    line but materializes nothing else (no content UTF8String, no metadata
-    fields), and crucially no second ``get_json_object``/``json_object_keys``
-    parse rides along. LWW winner selection needs exactly these columns;
-    the full parse (+ the schema-evolution key probe) runs afterwards on
-    winners only — at a 20:1 conflict ratio that is 5% of the events.
-    Filters (RECORD type, stream, op present) are identical to
-    :func:`parse_envelopes_once`, so a malformed event can never win a key
-    it would previously have lost.
-
-    ``key_types``: data types for the key columns (from the table schema) —
-    parsing a non-string key as string would hash-bucket it differently
-    from the table's typed ``with_bucket`` and break bucket locality."""
-    key_types = key_types or {}
-    min_data = T.StructType(
-        [
-            T.StructField(k, key_types.get(k, T.StringType()), True)
-            for k in key_columns
-        ]
-        + [
-            T.StructField("op", T.StringType(), True),
-            T.StructField("seq", T.LongType(), True),
-        ]
-    )
-    env_schema = model.envelope_schema(min_data)
-    m = F.from_json(F.col("value"), env_schema)
-    out_cols = [m["record"]["data"][k].alias(k) for k in key_columns] + [
-        m["record"]["emitted_at"].alias(model.META_EMITTED),
-        m["record"]["data"]["seq"].cast("long").alias(model.META_SEQ),
-        m["record"]["data"]["op"].alias(model.META_OP),
-    ]
-    return _project_filter_once(raw, m, out_cols, stream, keep_value=True)
-
-
-def observed_data_fields(raw: DataFrame, stream: str = model.STREAM_NAME) -> list[str]:
-    """Distinct data-field names present in a (micro-)batch — the probe behind
-    additive schema evolution (SURVEY.md §2.8 T4). Cheap: one distinct over
-    exploded key names, executed per batch on already-small batch data."""
-    env = raw.select(F.from_json(F.col("value"), model.ENVELOPE_SCHEMA).alias("m"))
-    keys = (
-        env.filter((F.col("m.type") == "RECORD") & (F.col("m.record.stream") == stream))
-        .select(F.explode(F.json_object_keys(F.col("m.record.data"))).alias("k"))
-        .distinct()
-        .collect()
-    )
-    return sorted(r["k"] for r in keys)

@@ -20,7 +20,7 @@ import re
 import time
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,17 +39,10 @@ class CdcPipeline:
         self,
         table: LakeTable,
         stream: str = model.STREAM_NAME,
-        use_pandas_udfs: bool = False,
-        auto_evolve: bool = True,
-        collect_lineage: bool = True,
         post_merge_hook=None,
         maintenance_every: int | None = 16,
     ):
-        """``use_pandas_udfs`` switches normalize/sha to the Arrow-batched
-        pandas UDF implementations (both are vectorized; the expression form
-        stays fully inside whole-stage codegen and is the default).
-
-        ``post_merge_hook``: optional ``callable(table, version)`` invoked
+        """``post_merge_hook``: optional ``callable(table, version)`` invoked
         after each successfully committed merge — the user-pluggable
         equivalent of the reference's post-write dbt normalization container
         (``/root/reference/abm/normalization.py:28-42``, invoked at
@@ -67,9 +60,6 @@ class CdcPipeline:
         job instead — the cluster-scale deployment shape)."""
         self.table = table
         self.stream = stream
-        self.use_pandas_udfs = use_pandas_udfs
-        self.auto_evolve = auto_evolve
-        self.collect_lineage = collect_lineage
         self.post_merge_hook = post_merge_hook
         self.maintenance_every = maintenance_every
         self._batches_since_maintenance = 0
@@ -110,60 +100,36 @@ class CdcPipeline:
 
     def transform(self, changes: DataFrame) -> DataFrame:
         """Normalize content + sha256 fingerprint (north_star F6/F7).
-        Tombstones keep null content/sha."""
-        if self.use_pandas_udfs:
-            norm = cf.normalize_content(F.col("content"))
-            changes = changes.withColumn("content", norm)
-            sha = cf.sha256_content(F.col("content"))
-        else:
-            changes = changes.withColumn(
-                "content", cf.normalize_content_expr(F.col("content"))
-            )
-            sha = cf.sha256_expr(F.col("content"))
+        Tombstones keep null content/sha. Pure Catalyst expressions: the
+        whole transform stays inside whole-stage codegen."""
+        changes = changes.withColumn(
+            "content", cf.normalize_content_expr(F.col("content"))
+        )
         return changes.withColumn(
             model.META_SHA,
-            F.when(F.col("content").isNotNull(), sha),
+            F.when(F.col("content").isNotNull(), cf.sha256_expr(F.col("content"))),
         )
 
     # ------------------------------------------------------------- evolution
-    def _evolve_new_fields(self, raw: DataFrame, new: list[str]) -> None:
+    def _evolve_new_fields(self, df: DataFrame, line_col: str, new: list[str]) -> None:
         """Widen the table for fields that appeared mid-stream: infer a
         conservative type from one sample value per field (the reference
         plays the same 'number may be int or double, play it safe' game at
-        ``/root/reference/abm/connector.py:182-185``). Runs only on the rare
-        batch that actually carries new fields, and samples ALL new fields
-        in ONE aggregation job (first non-null value per field rides a
-        single pass over the batch) instead of one limit/collect job per
-        field."""
-        env = raw.select(F.from_json(F.col("value"), model.ENVELOPE_SCHEMA).alias("m"))
-        samples = env.agg(
+        ``abm/connector.py:182-185``). ``line_col`` holds
+        raw envelope lines: the batch's ``value`` on the keyless path, the
+        CACHED winners' ``_w.value`` on the keyed path (which therefore
+        never re-reads the feed). Runs only on the rare batch that actually
+        carries new fields, and samples ALL new fields in ONE aggregation
+        job (first non-null value per field)."""
+        samples = df.agg(
             *[
                 F.first(
-                    F.get_json_object(F.col("m.record.data"), f"$.{name}"),
+                    F.get_json_object(F.col(line_col), f"$.record.data.{name}"),
                     ignorenulls=True,
                 ).alias(name)
                 for name in new
             ]
         ).collect()[0]
-        self.table.evolve(self._infer_fields(samples, new))
-
-    def _evolve_new_fields_from_winners(self, grouped: DataFrame, new: list[str]) -> None:
-        """Same type inference, sampling the CACHED winner lines (one job
-        over 1-row-per-key data) — the keyed path never re-reads the feed
-        for evolution."""
-        samples = grouped.agg(
-            *[
-                F.first(
-                    F.get_json_object(F.col("_w.value"), f"$.record.data.{name}"),
-                    ignorenulls=True,
-                ).alias(name)
-                for name in new
-            ]
-        ).collect()[0]
-        self.table.evolve(self._infer_fields(samples, new))
-
-    @staticmethod
-    def _infer_fields(samples, new: list[str]) -> list[T.StructField]:
         fields = []
         for name in new:
             v = samples[name]
@@ -174,7 +140,7 @@ class CdcPipeline:
             else:
                 dt = T.StringType()
             fields.append(T.StructField(name, dt, True))
-        return fields
+        self.table.evolve(fields)
 
     # ----------------------------------------------------------------- batch
     def apply_batch(
@@ -195,13 +161,13 @@ class CdcPipeline:
 
         Plan shape — minimal parse, full decode on WINNERS only:
 
-        1. ``parse_envelopes_minimal``: ONE ``from_json`` per line typing
-           only identity keys + op + seq (+ the envelope cursor); the raw
-           line rides along untouched. No full-payload decode, no second
-           ``json_object_keys`` parse — at a 20:1 conflict ratio, fully
-           decoding every event pays ~20x the decode the table needs
-           (measured: the r2 full-width parse with the probe column was
-           2.2x this parse on the 10M-event replay).
+        1. ``parse_envelopes_once`` with a data schema of only the identity
+           keys + op + seq: ONE ``from_json`` per line (+ the envelope
+           cursor); the raw line rides along untouched. No full-payload
+           decode, no second ``json_object_keys`` parse — at a 20:1
+           conflict ratio, fully decoding every event pays ~20x the decode
+           the table needs (measured: the r2 full-width parse with the
+           probe column was 2.2x this parse on the 10M-event replay).
         2. ONE aggregation over (bucket, key): the LWW winner's raw line
            (``max_by`` over the cursor — see lake.table.dedup_lww for why
            an aggregate, not a window), event count, cursor/offset ranges.
@@ -209,11 +175,12 @@ class CdcPipeline:
            collapses conflicts before the exchange. The tiny aggregate
            (1 row per live key) is what gets cached — never the parsed
            full-width feed (caching that measured 20s vs 4.7s at r1).
-        3. The schema-evolution probe (``json_object_keys``), lineage, the
-           full payload decode, normalize + sha256 all run on winners only.
-           A new field triggers evolution when a WINNING row carries it (a
-           field seen only on LWW losers is superseded data); since winner
-           selection is schema-independent, evolution widens the table and
+        3. The schema-evolution probe (``json_object_keys``) and lineage
+           share ONE driver job over the cached winners; the full payload
+           decode, normalize + sha256 run on winners only. A new field
+           triggers evolution when a WINNING row carries it (a field seen
+           only on LWW losers is superseded data); since winner selection
+           is schema-independent, evolution widens the table and
            re-projects the CACHED winners — no second pass over the feed.
         4. winners take one cheap repartition onto the bucket key for the
            per-bucket file write.
@@ -227,13 +194,14 @@ class CdcPipeline:
         tm = self.timings = {}
         t_batch = time.time()
         order_key = F.struct(F.col(model.META_EMITTED), F.col(model.META_SEQ))
-        key_types = {
-            f.name: f.dataType
-            for f in self.table.schema().fields
-            if f.name in keys
-        }
-        minimal = feed_src.parse_envelopes_minimal(
-            raw, keys, self.stream, key_types=key_types
+        schema = self.data_schema()
+        # non-string keys keep their table type: parsing them as strings
+        # would hash-bucket them differently from the table's with_bucket
+        key_schema = T.StructType(
+            [f for f in schema.fields if f.name in ("op", "seq", *keys)]
+        )
+        minimal = feed_src.parse_envelopes_once(
+            raw, key_schema, self.stream, keep_value=True
         )
         minimal = self.table.with_bucket(minimal)
         aggs = [
@@ -261,48 +229,22 @@ class CdcPipeline:
         # documented decision, not an inherited default)
         grouped.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            lineage_obj = None
-            if self.auto_evolve:
-                t0 = time.time()
-                if self.collect_lineage:
-                    # probe + lineage in ONE driver job: the evolution
-                    # probe's distinct key names ride the lineage
-                    # aggregation over the cached per-key winners (see
-                    # lineage_from_grouped) — at tail cadence the fixed
-                    # per-job cost dominated both when run separately
-                    lineage_obj, observed = lineage_from_grouped(
-                        grouped, batch_id, checkpoint_id,
-                        with_observed_keys=True,
-                    )
-                else:
-                    observed = [
-                        r[0]
-                        for r in grouped.select(
-                            F.explode(
-                                F.json_object_keys(
-                                    F.get_json_object(
-                                        F.col("_w.value"), "$.record.data"
-                                    )
-                                )
-                            ).alias("k")
-                        ).distinct().collect()
-                    ]
-                tm["probe_collect"] = round(time.time() - t0, 3)
-                known = {f.name for f in self.data_schema().fields}
-                new = sorted(k for k in observed if k not in known)
-                if new:
-                    self._evolve_new_fields_from_winners(grouped, new)
-
-            schema = self.data_schema()
-            lineage = None
-            if self.collect_lineage:
-                t0 = time.time()
-                if lineage_obj is None:
-                    lineage_obj = lineage_from_grouped(
-                        grouped, batch_id, checkpoint_id
-                    )
-                lineage = lineage_obj.to_dict()
-                tm["lineage_collect"] = round(time.time() - t0, 3)
+            # probe + lineage in ONE driver job: the evolution probe's
+            # distinct key names ride the lineage aggregation over the
+            # cached per-key winners (see lineage_from_grouped) — at tail
+            # cadence the fixed per-job cost dominated both when run
+            # separately
+            t0 = time.time()
+            lineage_obj, observed = lineage_from_grouped(
+                grouped, batch_id, checkpoint_id
+            )
+            lineage = lineage_obj.to_dict()
+            tm["probe_collect"] = round(time.time() - t0, 3)
+            known = {f.name for f in schema.fields}
+            new = sorted(k for k in observed if k not in known)
+            if new:
+                self._evolve_new_fields(grouped, "_w.value", new)
+                schema = self.data_schema()
 
             # shuffle.partitions can be non-numeric on some platforms
             # (e.g. "auto" under auto-optimized shuffle) — fall back to
@@ -319,9 +261,7 @@ class CdcPipeline:
             # conflict), projected through the current — possibly just
             # widened — schema
             env_schema = model.envelope_schema(schema)
-            user_cols = [
-                f.name for f in schema.fields if f.name not in ("op", "seq")
-            ]
+            user_cols = model.user_columns(schema)
             w = grouped.select(
                 F.col(model.BUCKET_COLUMN),
                 F.col(f"_w.{model.META_EMITTED}").alias(model.META_EMITTED),
@@ -372,38 +312,35 @@ class CdcPipeline:
         parsed batch directly."""
         schema = self.data_schema()
         parsed = feed_src.parse_envelopes_once(
-            raw, schema, self.stream, with_keys=self.auto_evolve
+            raw, schema, self.stream, with_keys=True
         )
         parsed = self.table.with_bucket(parsed)
         parsed.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            if self.auto_evolve:
-                observed = [
-                    r[0]
-                    for r in parsed.select(
-                        F.explode(model.META_KEYS).alias("k")
-                    ).distinct().collect()
-                ]
-                known = {f.name for f in schema.fields}
-                new = sorted(k for k in observed if k not in known)
-                parsed = parsed.drop(model.META_KEYS)
-                if new:
-                    self._evolve_new_fields(raw, new)
-                    parsed.unpersist()
-                    parsed = self.table.with_bucket(
-                        feed_src.parse_envelopes_once(
-                            raw, self.data_schema(), self.stream
-                        )
+            observed = [
+                r[0]
+                for r in parsed.select(
+                    F.explode(model.META_KEYS).alias("k")
+                ).distinct().collect()
+            ]
+            known = {f.name for f in schema.fields}
+            new = sorted(k for k in observed if k not in known)
+            parsed = parsed.drop(model.META_KEYS)
+            if new:
+                self._evolve_new_fields(raw, "value", new)
+                parsed.unpersist()
+                parsed = self.table.with_bucket(
+                    feed_src.parse_envelopes_once(
+                        raw, self.data_schema(), self.stream
                     )
-                    parsed.persist(StorageLevel.MEMORY_AND_DISK)
+                )
+                parsed.persist(StorageLevel.MEMORY_AND_DISK)
             winners = parsed
             if "content" in winners.columns:
                 winners = self.transform(winners)
-            lineage = None
-            if self.collect_lineage:
-                lineage = lineage_from_batch(
-                    parsed, winners, batch_id, checkpoint_id
-                ).to_dict()
+            lineage = lineage_from_batch(
+                parsed, winners, batch_id, checkpoint_id
+            ).to_dict()
             version = self.table.merge(
                 winners,
                 batch_id=batch_id,
@@ -480,6 +417,3 @@ class CdcPipeline:
             ]
         return query
 
-
-def throughput(n_events: int, started: float) -> float:
-    return n_events / max(time.time() - started, 1e-9)

@@ -80,7 +80,7 @@ def replay_until_steady(
             # ~10 replayed tables piled up in the work dir
             shutil.rmtree(os.path.join(work, f"table_{tag}{i - 2}"), ignore_errors=True)
             shutil.rmtree(os.path.join(work, f"ck_{tag}{i - 2}"), ignore_errors=True)
-        eng = Engine(spark, os.path.join(work, f"table_{tag}{i}"), collect_lineage=True)
+        eng = Engine(spark, os.path.join(work, f"table_{tag}{i}"))
         t0 = time.time()
         eng.replay(
             feed,

@@ -7,9 +7,8 @@ import pytest
 from airbyte_module_spark import model
 from airbyte_module_spark.lake.table import LakeTable
 from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
-from airbyte_module_spark.sources import feed as feed_src
 from airbyte_module_spark.streaming.pipeline import CdcPipeline
-from tests.util import assert_matches_oracle
+from tests.util import assert_matches_oracle, parse_envelopes
 
 
 @pytest.mark.parametrize("mode", ["mor", "cow"])
@@ -152,7 +151,7 @@ def test_changes_between_versions(spark, tmp_path):
         (r["repo"], r["path"]): (r[model.META_SEQ], r[model.META_OP])
         for r in table.changes(v1, v2).collect()
     }
-    expected_rows = dedup_lww(feed_src.parse_envelopes(raw1)).collect()
+    expected_rows = dedup_lww(parse_envelopes(raw1)).collect()
     expected = {
         (r["repo"], r["path"]): (r[model.META_SEQ], r[model.META_OP])
         for r in expected_rows
@@ -367,6 +366,25 @@ def test_overwrite_is_atomic_under_crash(spark, tmp_path, monkeypatch):
     # and a later overwrite still works normally
     eng.write(spark.createDataFrame([("c", 3)], sch), mode="overwrite")
     assert sorted(tuple(r) for r in eng.read().collect()) == [("c", 3)]
+
+
+def test_writes_in_the_same_millisecond_both_land(spark, tmp_path, monkeypatch):
+    """Every Engine.write is its own exactly-once key: two appends under a
+    frozen clock must both commit (a clock-based key made the second one an
+    "already applied" no-op that silently dropped its rows)."""
+    import types
+
+    import pyspark.sql.types as T
+
+    from airbyte_module_spark import Engine, engine
+
+    monkeypatch.setattr(engine, "time", types.SimpleNamespace(time=lambda: 1.7e9))
+    sch = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
+    eng = Engine(spark, str(tmp_path / "t"), schema=sch, key_columns=[], n_buckets=2)
+    v1 = eng.write(spark.createDataFrame([("a", 1)], sch), mode="append")
+    v2 = eng.write(spark.createDataFrame([("b", 2)], sch), mode="append")
+    assert v1 is not None and v2 is not None and v2 > v1
+    assert sorted(tuple(r) for r in eng.read().collect()) == [("a", 1), ("b", 2)]
 
 
 def test_concurrent_writers_both_commit_with_rebase(spark, tmp_path):

@@ -225,6 +225,26 @@ def test_near_dup_lsh_matches_allpairs_within_buckets(emb):
     assert len(got) >= len(allp) // 2, f"recall {len(got)}/{len(allp)} too low"
 
 
+def test_near_dup_lsh_big_corpus_path_matches_broadcast_path(emb, monkeypatch):
+    """``near_dup_pairs_lsh`` switches on corpus size: broadcast matrix +
+    in-kernel scoring up to SCORE_BROADCAST_MAX_ROWS, distributed
+    banded-bucket groupBy + shuffle-join scoring above it. Forcing the
+    big-corpus path on the same fixture must return the same pairs with
+    bit-identical scores."""
+    from airbyte_module_spark.operators import similarity
+
+    def pairs():
+        return {
+            (r["vec_a"], r["vec_b"]): (r["dot_q"], r["cosine"])
+            for r in similarity.near_dup_pairs_lsh(emb, threshold=0.45).collect()
+        }
+
+    small = pairs()
+    assert small, "fixture should contain banded-LSH near-dup collisions"
+    monkeypatch.setattr(similarity, "SCORE_BROADCAST_MAX_ROWS", 0)
+    assert pairs() == small
+
+
 def test_ann_recall_gate(emb):
     """Quantified recall@5 against the exact ranking.
 

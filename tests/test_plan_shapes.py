@@ -9,8 +9,8 @@ failure, not as a 10x slowdown on the cluster.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SF = "/root/testdata/sf0.001"
 
@@ -128,26 +128,18 @@ def test_ann_bruteforce_is_mapside_topk(spark):
     assert "BatchEvalPython" not in plan
 
 
-@pytest.mark.parametrize("use_pandas", [False, True])
-def test_pipeline_transform_vectorized(spark, use_pandas, tmp_path):
-    """The normalize+sha transform is either pure codegen (expression form,
-    zero Python) or ArrowEvalPython (pandas-UDF form) — never BatchEval."""
+def test_pipeline_transform_vectorized(spark, tmp_path):
+    """The pipeline's normalize+sha transform is pure codegen: zero Python
+    of any kind in the plan."""
     from airbyte_module_spark import Engine
 
-    eng = Engine(
-        spark, str(tmp_path / f"t{use_pandas}"), use_pandas_udfs=use_pandas
-    )
+    eng = Engine(spark, str(tmp_path / "t"))
     df = spark.createDataFrame(
         [("r", "p", "c", "py", "x\r\ny ")],
         ["repo", "path", "commit", "lang", "content"],
     )
-    out = eng.pipeline.transform(df)
-    plan = physical(out)
-    assert "BatchEvalPython" not in plan
-    if use_pandas:
-        assert "ArrowEvalPython" in plan
-    else:
-        assert "Python" not in plan
+    plan = physical(eng.pipeline.transform(df))
+    assert "Python" not in plan
 
 
 def test_minimal_parse_ingest_plan_single_parse_no_probe_rider(spark, tmp_path):
@@ -159,12 +151,20 @@ def test_minimal_parse_ingest_plan_single_parse_no_probe_rider(spark, tmp_path):
     full-width exchange (map-side combine)."""
     from airbyte_module_spark import model
     from airbyte_module_spark.lake.table import bucket_expr
-    from airbyte_module_spark.sources.feed import parse_envelopes_minimal
+    from airbyte_module_spark.sources.feed import parse_envelopes_once
     from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
 
     generate_feed(FeedSpec(seed=6, n_events=200), str(tmp_path / "feed"))
     raw = spark.read.text(str(tmp_path / "feed"))
-    minimal = parse_envelopes_minimal(raw, ["repo", "path"]).withColumn(
+    # the pipeline's key parse: identity keys + op + seq, raw line kept
+    key_schema = T.StructType(
+        [
+            f
+            for f in model.base_data_schema().fields
+            if f.name in ("op", "seq", "repo", "path")
+        ]
+    )
+    minimal = parse_envelopes_once(raw, key_schema, keep_value=True).withColumn(
         model.BUCKET_COLUMN, bucket_expr(32, ["repo", "path"])
     )
     order_key = F.struct(F.col(model.META_EMITTED), F.col(model.META_SEQ))

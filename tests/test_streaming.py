@@ -28,7 +28,7 @@ def test_engine_replay_multibatch(spark, tmp_path):
 
     feed = str(tmp_path / "feed")
     events = generate_feed(FeedSpec(seed=22, n_events=300, n_shards=6), feed)
-    eng = Engine(spark, str(tmp_path / "t"), collect_lineage=True)
+    eng = Engine(spark, str(tmp_path / "t"))
     eng.replay(feed, checkpoint_dir=str(tmp_path / "ck"), max_files_per_trigger=1)
     assert len(eng.lineage()) >= 6
     assert_matches_oracle(eng.table, events)
